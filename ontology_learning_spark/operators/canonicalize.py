@@ -4,14 +4,21 @@ edges as an iterative DataFrame join loop — no RDDs, no per-row Python.
 The reference's canonicalization is a single-hop sameAs mapping plus
 MERGE-by-name idempotency; the north star requires the general case:
 alias chains and hubs resolved to a canonical label via union-find
-semantics. We run the alternating large-star / small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond") —
-each iteration is two self-joins + aggregations, converging in
-O(log^2 n) rounds; every step is shuffle-on-key, skew handled by AQE.
+semantics (component = min node id).
 
-Driver-side loop hygiene for scale: `localCheckpoint` every iteration
-cuts the lineage chain (else the plan doubles per round), and
-convergence is a `count()` of changed labels.
+Every caller resolves its graph the same way. Up to ``small_threshold``
+edges one bounded ``limit(k+1)`` probe collects the edge set and an
+exact driver union-find labels it. Above that, ``_hook_loop`` runs: a
+FastSV-style parent-pointer loop (Zhang, Azad & Hu, "FastSV", after
+Shiloach–Vishkin) over a static symmetric edge frame. Each round hooks
+trees onto their neighbours' grandparents and shortcuts every pointer
+to its grandparent, so chains collapse in O(log n) rounds instead of
+the diameter rounds of plain min-label propagation. The loop stops
+only when no parent pointer changes.
+
+Driver-side loop hygiene for scale: `localCheckpoint` every round cuts
+the lineage chain (else the plan doubles per round), and convergence
+is an `isEmpty()` over the changed pointers.
 """
 
 from __future__ import annotations
@@ -26,140 +33,64 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     ).where(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    small_threshold: int = 200_000,
-) -> DataFrame:
-    """Return (node, component) where component = min node id (string
-    ordering) in the node's connected component.
+def _hook_loop(e: DataFrame) -> DataFrame:
+    """Connected components of a pinned, symmetric, self-loop-free
+    (src, dst) edge frame; returns (node, component) with component =
+    min node id.
 
-    Hybrid plan (same pattern as ``canonical_mapping`` /
-    ``incremental_components``): below ``small_threshold`` edges the
-    pairs are collected by a bounded ``limit(k+1)`` probe and resolved
-    with the exact driver union-find ``_uf_min_labels`` — identical
-    min-label semantics, zero iterative rounds. Near-dup pair sets are
-    typically orders of magnitude smaller than the corpus, and each
-    distributed round costs 2 exchanges + a checkpoint + a count job,
-    which dominates wall time for small graphs (measured ~3 s of the
-    9.6 s dedup_clusters wall at 50k docs for a 2.5k-pair graph).
-    Above the threshold, the distributed min-label propagation loop
-    runs as before.
+    State is one parent pointer per node, f[v] = v at the start. A
+    round computes the grandparent gf[v] = f[f[v]], the neighbour
+    minimum nb[u] = min gf[v] over edges (u, v), and then sets
 
-    Implementation (large path): iterated min-label propagation over
-    the symmetric edge set (a simple, robustly correct variant of star
-    contraction: each round every node adopts the min of its own label
-    and its neighbours' labels; converges in diameter rounds, which is
-    small for alias graphs — chains are short, hubs are depth-1).
+        f[x] = min(f[x], gf[x], nb[x], min{nb[u] : f[u] = x})
+
+    (shortcut, aggressive hooking, and hooking of x's tree onto its
+    children's neighbours). Pointers only decrease and stay inside the
+    component. A round with no change leaves every tree a star whose
+    pointer equals all neighbours' pointers, so each component carries
+    one label, its minimum node. Since f never exceeds the labels of
+    min-label propagation, which settles within the diameter (< n
+    rounds), n + 1 rounds without convergence mean a defect: the loop
+    raises rather than return an unconverged labelling.
+
+    The edge frame is the only edge-sized input and is joined on dst
+    each round, so a dst-bucketed table (``connected_components_bucketed``)
+    keeps that side exchange-free; every other join is node-sized.
     """
-    e0 = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    probe = e0.limit(small_threshold + 1).collect()
-    if len(probe) <= small_threshold:
-        merged = _uf_min_labels([(r["src"], r["dst"]) for r in probe])
-        ntype = edges.schema[src].dataType.simpleString()
-        spark = edges.sparkSession
-        # UTF-8 byte order == code-point order, so the Python min-label
-        # matches Spark's string ordering exactly; numeric ids compare
-        # identically too.
-        return spark.createDataFrame(
-            sorted(merged.items()), schema=f"node {ntype}, component {ntype}"
-        )
-    # Shuffle budget per round: the labels-onto-edges join exchanges
-    # both sides plus one aggregation exchange. Pre-partitioning the
-    # edge set to make the joins exchange-free does NOT survive in
-    # current Spark: with AQE enabled the LogicalRDD a localCheckpoint
-    # (or the InMemoryRelation a persist) leaves behind reports no
-    # outputPartitioning, so every round re-exchanges regardless
-    # (measured on 4.1; explicit-count repartition changes nothing).
-    # The lever that DOES survive is catalog metadata: for repeated CC
-    # over a stable edge set, write it bucketed by dst
-    # (sources/bucketing.py) and the join side drops out. What this
-    # loop owns instead: the convergence check is FUSED into the label
-    # update below (a _changed flag on the frame we pin anyway) —
-    # the old separate new-vs-old join cost a third join + two more
-    # exchanges + an extra pass per round.
-    e = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    e = e.localCheckpoint()
-    return _min_label_loop(e, max_iter)
-
-
-def _min_label_loop(e: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation rounds over a pinned symmetric (src, dst)
-    edge frame; returns (node, component)."""
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("component", F.col("node"))
+    f = (
+        e.select(F.col("src").alias("node")).distinct()
+        .withColumn("parent", F.col("node"))
     ).localCheckpoint()
-
-    for _ in range(max_iter):
-        # neighbour min-label: join labels onto edge dst, aggregate
-        # min per src (the message exchange of label propagation)
-        neigh = (
-            e.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("component").alias("neigh_min"))
-            .withColumnRenamed("src", "node")
+    n_nodes = f.count()
+    for _ in range(n_nodes + 1):
+        gf = f.join(
+            f.select(F.col("node").alias("parent"), F.col("parent").alias("gp")), "parent"
         )
-        # Label update carries its own convergence flag: the old
-        # per-round (new JOIN old ON node) changed-count shuffle is
-        # replaced by a scan of the frame we just pinned anyway.
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("neigh_min"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("neigh_min"), F.col("component")) < F.col("component")
-                 ).alias("_changed"),
-            )
+        nb = (
+            e.join(gf.select(F.col("node").alias("dst"), F.col("gp").alias("ngp")), "dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("ngp").alias("nb"))
+        )
+        t = gf.join(nb, "node")
+        hook = t.groupBy(F.col("parent").alias("node")).agg(F.min("nb").alias("hook"))
+        # least() skips the NULL hook of nodes that are no one's parent
+        best = F.least("parent", "gp", "nb", "hook")
+        new_f = (
+            t.join(hook, "node", "left")
+            .select("node", best.alias("parent"), (best < F.col("parent")).alias("_changed"))
         ).localCheckpoint()
-
-        changed = new_labels.where("_changed").count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-
-    return labels
-
-
-def connected_components_bucketed(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_buckets: int = 64,
-    table: str = "cc_edges_bucketed",
-    max_iter: int = 50,
-) -> DataFrame:
-    """``connected_components`` for corpus-scale edge sets: pins the
-    symmetrized edges as a parquet table bucketed by dst, so the BIG
-    side of every round's labels-onto-edges join is exchange-free —
-    bucketing is catalog metadata, the one partitioning carrier that
-    survives AQE and checkpoints (see the shuffle-budget note in
-    ``connected_components``). The node-sized labels side still
-    exchanges; at 10^9 edges vs 10^7 distinct nodes that is the right
-    trade. The one-time bucketed write costs a shuffle — it pays for
-    itself from the second round on, and is amortized across runs when
-    the alias graph is stable between pipeline executions.
-    """
-    spark = edges.sparkSession
-    from ..sources.bucketing import write_bucketed
-
-    e0 = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    write_bucketed(e0, table, "dst", n_buckets=n_buckets)
-    return _min_label_loop(spark.table(table), max_iter)
+        f = new_f.drop("_changed")
+        if new_f.where("_changed").isEmpty():
+            return f.withColumnRenamed("parent", "component")
+    raise RuntimeError(
+        f"connected components did not converge within {n_nodes + 1} rounds "
+        f"over {n_nodes} nodes"
+    )
 
 
 def _uf_min_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:
     """Driver-side union-find returning min-label components (the exact
-    semantics of ``connected_components``: component = min node id)."""
+    semantics of ``_hook_loop``: component = min node id)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -178,6 +109,79 @@ def _uf_min_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     return {x: find(x) for x in parent}
+
+
+def _local_frame(spark, rows: list[tuple], cols: tuple[str, str], dtype: str) -> DataFrame:
+    """Driver rows as an Arrow-built local relation of two ``dtype``
+    columns: collecting or joining it runs no Spark job, unlike a
+    list-built frame, whose pickled RDD also cold-starts a Python
+    worker on first scan."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=list(cols)), schema=f"{cols[0]} {dtype}, {cols[1]} {dtype}"
+    )
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    small_threshold: int = 200_000,
+) -> DataFrame:
+    """Return (node, component) where component = min node id (string
+    ordering) in the node's connected component.
+
+    Up to ``small_threshold`` edges the pairs arrive in one bounded
+    ``limit(k+1)`` probe and the driver union-find labels them: zero
+    iterative rounds, and the result is a local relation. Near-dup and
+    alias pair sets are typically orders of magnitude smaller than the
+    corpus, and each distributed round costs several exchanges, a
+    checkpoint and a convergence job, which dominates wall time for
+    small graphs (measured ~3 s of the 9.6 s dedup_clusters wall at 50k
+    docs for a 2.5k-pair graph). Above the threshold the edges are
+    symmetrized, pinned and resolved by ``_hook_loop``.
+    """
+    e0 = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+    )
+    probe = e0.limit(small_threshold + 1).collect()
+    if len(probe) > small_threshold:
+        return _hook_loop(_symmetrize(e0).localCheckpoint())
+    merged = _uf_min_labels([(r["src"], r["dst"]) for r in probe])
+    # UTF-8 byte order == code-point order, so the Python min-label
+    # matches Spark's string ordering exactly; numeric ids compare
+    # identically too.
+    return _local_frame(edges.sparkSession, sorted(merged.items()), ("node", "component"),
+                        edges.schema[src].dataType.simpleString())
+
+
+def connected_components_bucketed(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    n_buckets: int = 64,
+    table: str = "cc_edges_bucketed",
+) -> DataFrame:
+    """``connected_components`` for corpus-scale edge sets: pins the
+    symmetrized edges as a parquet table bucketed by dst, so the BIG
+    side of every round's edges-onto-grandparents join is exchange-free.
+    Bucketing is catalog metadata, the one partitioning carrier that
+    survives AQE and checkpoints: with AQE on, the LogicalRDD a
+    localCheckpoint leaves behind reports no outputPartitioning, so a
+    pre-partitioned edge frame re-exchanges every round (measured on
+    Spark 4.1). The node-sized sides still exchange; at 10^9 edges vs
+    10^7 distinct nodes that is the right trade. The one-time bucketed
+    write costs a shuffle — it pays for itself from the second round
+    on, and is amortized across runs when the alias graph is stable
+    between pipeline executions.
+    """
+    from ..sources.bucketing import write_bucketed
+
+    e0 = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    write_bucketed(e0, table, "dst", n_buckets=n_buckets)
+    return _hook_loop(edges.sparkSession.table(table))
 
 
 def incremental_components(
@@ -201,16 +205,14 @@ def incremental_components(
     the min of its component and new nodes enter as their own labels.
 
     Cost: one broadcast join of the delta endpoints onto the mapping,
-    a CC over the CONTRACTED component graph (≤ 2·|delta| nodes —
-    driver union-find below ``small_threshold`` contracted edges, the
-    distributed min-label loop above), then one broadcast-remap pass
-    over the mapping. The full-mapping pass is the floor for producing
-    the complete updated table; a partitioned sink would overwrite only
-    the affected component partitions instead.
+    ``connected_components`` over the CONTRACTED component graph
+    (≤ 2·|delta| nodes; ``small_threshold`` is forwarded to it), then
+    one broadcast-remap pass over the mapping. The full-mapping pass is
+    the floor for producing the complete updated table; a partitioned
+    sink would overwrite only the affected component partitions instead.
     """
     from ..functions.persistence import materialize
 
-    spark = components.sparkSession
     # Pin the delta edges ONCE: endpoints, the contracted graph, and
     # the remap all consume this frame, and the caller's edge chain is
     # often expensive (e.g. an LSH verify) — unpinned, every action
@@ -243,31 +245,23 @@ def incremental_components(
         e.join(F.broadcast(lab_src), "src")
         .join(F.broadcast(lab_dst), "dst")
         .select(F.col("_la").alias("src"), F.col("_lb").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    probe = contracted.limit(small_threshold + 1).collect()
-    if len(probe) <= small_threshold:
-        merged = _uf_min_labels([(r["src"], r["dst"]) for r in probe])
-    else:
-        merged = {
-            r["node"]: r["component"]
-            for r in connected_components(contracted).collect()
-        }
-    remap = [(old, new) for old, new in merged.items() if old != new]
+    # below the threshold the result is a local relation: this collect
+    # runs no job beyond connected_components' own probe
+    remap = [
+        (r["node"], r["component"])
+        for r in connected_components(contracted, small_threshold=small_threshold).collect()
+        if r["node"] != r["component"]
+    ]
 
     # new-node rows enter with their (possibly remapped) label
     new_rows = misses
     if not remap:
         return components.unionByName(new_rows)
-    import pandas as pd
-
     # label dtype follows the mapping's (ids may be bigint, not string)
-    ctype = components.schema["component"].dataType.simpleString()
-    remap_df = spark.createDataFrame(
-        pd.DataFrame(sorted(remap), columns=["component", "_new"]),
-        schema=f"component {ctype}, _new {ctype}",
-    )
+    remap_df = _local_frame(components.sparkSession, sorted(remap), ("component", "_new"),
+                            components.schema["component"].dataType.simpleString())
     return (
         components.unionByName(new_rows)
         .join(F.broadcast(remap_df), "component", "left")
@@ -280,62 +274,30 @@ SMALL_ALIAS_THRESHOLD = 200_000
 
 def canonical_mapping(alias_edges: DataFrame, small_threshold: int = SMALL_ALIAS_THRESHOLD) -> DataFrame:
     """alias_edges(surface, alias_of) → (surface, canonical) resolving
-    chains/hubs; canonical = sink-preferring representative.
+    chains/hubs; canonical = sink-preferring representative (the min
+    alias target that is never a surface, else the min node).
 
-    Hybrid plan: the alias set is vocabulary-sized, usually tiny
-    relative to the corpus — below `small_threshold` edges we collect
-    and run an exact driver-side union-find (identical code to the test
-    oracle), skipping ~4 iterations x 3 shuffles of fixed overhead.
-    Above it, the iterative min-label DataFrame loop runs distributed.
+    One ``limit(k+1)`` probe decides the plan AND fetches the edges
+    when small: the alias set is vocabulary-sized, usually tiny
+    relative to the corpus, so up to ``small_threshold`` edges the
+    exact driver union-find of the test oracle runs. Above it the
+    probe is discarded and ``_hook_loop`` labels the components.
     """
     # Self-edges out FIRST so both paths share one contract: the
     # distributed path derives sink representatives from the surface
     # set, and a (x, x) edge would wrongly demote x from sink status
     # (the small-path oracle already filters self-pairs internally).
     alias_edges = alias_edges.where(F.col("surface") != F.col("alias_of"))
-    # limit(k+1)+collect instead of count()+collect(): one job decides
-    # the branch AND fetches the edges when small.
     probe = alias_edges.limit(small_threshold + 1).collect()
-    return canonical_mapping_probed(
-        alias_edges.sparkSession, probe, lambda: alias_edges, small_threshold
-    )
-
-
-def canonical_mapping_probed(
-    spark,
-    probe_rows: list,
-    alias_edges_fn,
-    small_threshold: int = SMALL_ALIAS_THRESHOLD,
-) -> DataFrame:
-    """``canonical_mapping`` when the caller already holds a
-    ``limit(small_threshold+1).collect()`` probe of the (self-edge-free)
-    alias edges — the pipeline overlaps that probe with the decision
-    checkpoint so its job leaves the serial tail. Falls back to the
-    distributed loop (via ``alias_edges_fn()``) when the probe
-    overflows the threshold."""
-    if len(probe_rows) <= small_threshold:
+    if len(probe) <= small_threshold:
         from ..oracle.reference import canonicalize_aliases
 
-        pairs = [(r["surface"], r["alias_of"]) for r in probe_rows]
-        mapping = canonicalize_aliases(pairs)
-        if not mapping:
-            return spark.createDataFrame([], "surface string, canonical string")
-        # pandas + Arrow, not a plain Python list: local-list
-        # createDataFrame builds a pickled RDD whose first scan
-        # cold-starts a Python worker on the critical path; the Arrow
-        # path converts JVM-side (same reasoning as prepare_catalog).
-        import pandas as pd
+        mapping = canonicalize_aliases([(r["surface"], r["alias_of"]) for r in probe])
+        return _local_frame(alias_edges.sparkSession, sorted(mapping.items()),
+                            ("surface", "canonical"), "string")
 
-        return spark.createDataFrame(
-            pd.DataFrame(sorted(mapping.items()), columns=["surface", "canonical"]),
-            schema="surface string, canonical string",
-        )
-
-    alias_edges = alias_edges_fn().where(F.col("surface") != F.col("alias_of"))
-    edges = alias_edges.select(
-        F.col("surface").alias("src"), F.col("alias_of").alias("dst")
-    )
-    cc = connected_components(edges)
+    edges = alias_edges.select(F.col("surface").alias("src"), F.col("alias_of").alias("dst"))
+    cc = _hook_loop(_symmetrize(edges).localCheckpoint())
     # Representative: prefer a node that never appears as a 'surface'
     # (i.e. a true canonical), else the min label. alias targets =
     # dst-side nodes minus src-side nodes.

@@ -660,14 +660,15 @@ def dedup_clusters(
     This is the step a training-data pipeline actually runs after pair
     detection: transitive near-dup groups collapse to one kept document
     (representative = min id here; swap the min for a quality-score
-    argmax to keep the best member). The component step reuses the M13
-    canonicalization machinery (iterative min-label propagation — no
-    per-row Python), so cluster chains (a~b~c without a~c clearing the
-    threshold) still collapse to one group.
+    argmax to keep the best member). The component step is the M13
+    ``connected_components`` (driver union-find up to its edge
+    threshold, the distributed hooking loop above it), so cluster
+    chains (a~b~c without a~c clearing the threshold) still collapse to
+    one group.
 
     Returns (canonical_id, cluster_size) for clusters of size ≥ 2.
 
-    Id contract: ids travel through the label propagation as zero-
+    Id contract: ids travel through the component step as zero-
     padded strings, padded to max(20, longest id in any pair) — the
     width is measured on the (materialized, near-dup-sized) pair frame
     so long ids are never silently TRUNCATED into colliding CC nodes.

@@ -49,36 +49,39 @@ def disjointness_violations(edges: DataFrame, disjoint_pairs: list[tuple[str, st
     return out.distinct()
 
 
-def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
+def subclass_cycles(edges: DataFrame) -> DataFrame:
     """A17 second axiom class: SUBCLASS_OF cycles (a taxonomy must be a
     DAG; any cycle makes every member class unsatisfiable under the
     reasoner).
 
     Exact membership — node ON a cycle ⟺ node ∈ Reach(node) — in two
-    phases:
+    phases, each run to its fixpoint:
 
-    1. **trim**: iteratively drop sinks (no outgoing edge within the
-       remaining set), then sources. This removes the DAG bulk cheaply
-       but OVER-approximates cycle membership: a node on a path
-       connecting two distinct cycles (A→B→A, B→M, M→C, C→D→C) has
-       in- and out-degree ≥ 1 and survives the peel without lying on
-       any cycle.
+    1. **trim**: drop sinks (no outgoing edge within the remaining set)
+       until none is left, then sources likewise. Every round that
+       continues removes an edge, so the trim terminates. It removes
+       the DAG bulk cheaply but OVER-approximates cycle membership: a
+       node on a path connecting two distinct cycles (A→B→A, B→M, M→C,
+       C→D→C) has in- and out-degree ≥ 1 and survives the peel without
+       lying on any cycle.
     2. **exact closure on the surviving core**: the trimmed remainder
        is the anomalous cycle-connected region — tiny by construction
-       in a taxonomy, where cycles are data bugs — so an iterative
-       (src, dst) transitive-closure join is safe there; cycle nodes
-       are exactly those with a (n, n) reachability pair.
+       in a taxonomy, where cycles are data bugs — so its transitive
+       closure is safe to build. Squaring (reach ∪ reach∘reach) doubles
+       the covered path length per round, so ⌈log2(longest path)⌉
+       rounds reach the fixpoint; cycle nodes are exactly those with a
+       (n, n) reachability pair.
     """
     e = (
         edges.where(F.col("rel_type") == "SUBCLASS_OF")
         .select("src", "dst").distinct().localCheckpoint()
     )
     # Convergence checks track the edge count in Python: one count()
-    # action per peel round (the previous round's count is remembered),
-    # not a pruned-vs-current pair of jobs per round.
+    # action per round (the previous round's count is remembered), not
+    # a before-vs-after pair of jobs per round.
     n_edges = e.count()
     for out_col, in_col in (("src", "dst"), ("dst", "src")):
-        for _ in range(max_iter):
+        while True:
             nodes_out = e.select(F.col(out_col).alias("n")).distinct()
             nodes_in = e.select(F.col(in_col).alias("n")).distinct()
             # keep only edges whose `in_col` endpoint still has an
@@ -95,14 +98,13 @@ def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     # first, and a positional union against (src, dst)-ordered rows
     # would silently symmetrize the edge set (flagging every weakly-
     # connected node); unionByName guards the same trap.
-    e = e.select("src", "dst")
-    reach = e.localCheckpoint()
-    n_reach = reach.count()
-    for _ in range(max_iter):
+    reach = e.select("src", "dst").localCheckpoint()
+    n_reach = n_edges
+    while True:
         nxt = (
             reach.alias("r")
-            .join(e.alias("g"), F.col("r.dst") == F.col("g.src"))
-            .select(F.col("r.src").alias("src"), F.col("g.dst").alias("dst"))
+            .join(reach.alias("s"), F.col("r.dst") == F.col("s.src"))
+            .select(F.col("r.src").alias("src"), F.col("s.dst").alias("dst"))
         )
         new_reach = reach.unionByName(nxt).distinct().localCheckpoint()
         n_new = new_reach.count()

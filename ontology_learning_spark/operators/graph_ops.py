@@ -5,9 +5,11 @@ is a DataFrame plan over `nodes(name, ...)` / `edges(src, rel_type, dst)`:
 
 - point lookup / substring / attribute filters → Catalyst filters
 - 1-hop joins, siblings, redundancy audits → equi/self-joins
-- transitive closure (`*1..`), shortest path → iterative frontier-join
-  BFS (no recursive CTE in Spark SQL ≤4.x for this shape); frontiers
-  are localCheckpointed to cut lineage
+- transitive closure (`*1..`), shortest path → one BFS, `_closure_from`:
+  a driver BFS over a bounded probe for ontology-sized graphs, else a
+  frontier-join loop (no recursive CTE in Spark SQL ≤4.x for this
+  shape) that runs until the frontier is empty; frontiers are
+  localCheckpointed to cut lineage
 - degree / top-k / histograms → aggregations + windows
 - leaves / orphans / pruning → anti-joins
 
@@ -40,158 +42,90 @@ SUBCLASS = "SUBCLASS_OF"
 _DRIVER_BFS_MAX_EDGES = 100_000
 
 
-def _bfs_levels(pairs: list[tuple], start, max_depth: int,
-                exclude_start: bool = False) -> dict:
-    """BFS over (from, to) pairs following from→to; returns
-    {name: depth} with depth = first-discovery level, exactly the
-    frontier-loop semantics (frontier at depth 1 pre-loop, expansion
-    while depth < max_depth). ``exclude_start`` mirrors the
-    shortest-path loop, whose seen-set starts as {start} so the start
-    node is never re-discovered through a cycle; the closure loops
-    start with an empty seen-set and CAN re-find their root."""
+def _bfs_levels(pairs: list[tuple], start, exclude_start: bool = False) -> dict:
+    """BFS over (from, to) pairs following from→to until the frontier
+    is empty; returns {name: depth} with depth = first-discovery level
+    ≥ 1. The start node is absent unless a cycle re-discovers it, and
+    ``exclude_start`` rules even that out."""
     adj: dict = {}
     for a, b in pairs:
         adj.setdefault(a, set()).add(b)
     seen: dict = {start: 0} if exclude_start else {}
-    frontier = sorted(x for x in adj.get(start, ()) if x not in seen)
-    depth = 1
-    for x in frontier:
-        seen[x] = depth
-    while frontier and depth < max_depth:
+    frontier, depth = [start], 0
+    while frontier:
+        depth += 1
         nxt = []
         for x in frontier:
             for y in adj.get(x, ()):
                 if y not in seen:
-                    seen[y] = depth + 1
+                    seen[y] = depth
                     nxt.append(y)
         frontier = nxt
-        depth += 1
+    if exclude_start:
+        del seen[start]
     return seen
 
 
-def _driver_bfs(spark, pairs: list[tuple], start, max_depth: int) -> DataFrame:
-    return spark.createDataFrame(
-        sorted(_bfs_levels(pairs, start, max_depth).items()),
-        schema="name string, depth int",
-    )
+def _closure_from(e: DataFrame, start: str, exclude_start: bool = False) -> DataFrame:
+    """Closure over pre-filtered (src, dst) edges starting at `start`,
+    following src→dst repeatedly until no new node appears. Returns
+    (name, depth), depth = hop count of the first discovery; semantics
+    of ``_bfs_levels``, which runs instead below
+    ``_DRIVER_BFS_MAX_EDGES`` edges."""
+    probe = e.limit(_DRIVER_BFS_MAX_EDGES + 1).collect()
+    if len(probe) <= _DRIVER_BFS_MAX_EDGES:
+        import pandas as pd
+
+        levels = _bfs_levels([(r["src"], r["dst"]) for r in probe], start, exclude_start)
+        # Arrow-built local relation: consumers collect it without a job
+        return e.sparkSession.createDataFrame(
+            pd.DataFrame(sorted(levels.items()), columns=["name", "depth"]),
+            schema="name string, depth int",
+        )
+    e = e.localCheckpoint()
+    seen = e.select(F.col("dst").alias("name"), F.lit(0).alias("depth")).limit(0)
+    reached = e.where(F.col("src") == start).select(F.col("dst").alias("name"))
+    depth = 1
+    while True:
+        nxt = reached.distinct().join(seen.select("name"), "name", "left_anti")
+        if exclude_start:
+            nxt = nxt.where(F.col("name") != start)
+        nxt = nxt.withColumn("depth", F.lit(depth)).localCheckpoint()
+        if nxt.isEmpty():
+            return seen
+        seen = seen.unionByName(nxt).localCheckpoint()
+        reached = e.join(nxt.select(F.col("name").alias("src")), "src").select(
+            F.col("dst").alias("name")
+        )
+        depth += 1
 
 
-def descendants(edges: DataFrame, root: str, rel_type: str | None = SUBCLASS,
-                max_depth: int = 64) -> DataFrame:
+def _rel_edges(edges: DataFrame, rel_type: str | None) -> DataFrame:
+    if rel_type is not None:
+        edges = edges.where(F.col("rel_type") == rel_type)
+    return edges.select("src", "dst")
+
+
+def descendants(edges: DataFrame, root: str, rel_type: str | None = SUBCLASS) -> DataFrame:
     """All nodes with a path node →(rel)* root (e.g. all subclasses of
     root). Returns (name, depth). Equivalent of Cypher `*1..` upward
     closure (QA Q4/Q13)."""
-    e = edges
-    if rel_type is not None:
-        e = e.where(F.col("rel_type") == rel_type)
-    e = e.select("src", "dst")
-    probe = e.limit(_DRIVER_BFS_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_BFS_MAX_EDGES:
-        # descendants follow edges upward: reverse (src→dst) to dst→src
-        return _driver_bfs(
-            edges.sparkSession, [(r["dst"], r["src"]) for r in probe], root, max_depth
-        )
-    e = e.localCheckpoint()
-
-    frontier = (
-        e.where(F.col("dst") == root)
-        .select(F.col("src").alias("name"))
-        .distinct()
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint()
-    )
-    seen = frontier
-    depth = 1
-    while depth < max_depth:
-        nxt = (
-            e.join(frontier.select(F.col("name").alias("dst")), "dst")
-            .select(F.col("src").alias("name"))
-            .distinct()
-            .join(seen.select("name"), "name", "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-        depth += 1
-    return seen
+    e = _rel_edges(edges, rel_type)
+    return _closure_from(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), root)
 
 
-def ancestors(edges: DataFrame, leaf: str, rel_type: str | None = SUBCLASS,
-              max_depth: int = 64) -> DataFrame:
+def ancestors(edges: DataFrame, leaf: str, rel_type: str | None = SUBCLASS) -> DataFrame:
     """Upward closure: all nodes reachable leaf →(rel)* (QA Q13)."""
-    e = edges
-    if rel_type is not None:
-        e = e.where(F.col("rel_type") == rel_type)
-    return _closure_from(e.select("src", "dst"), leaf, max_depth)
+    return _closure_from(_rel_edges(edges, rel_type), leaf)
 
 
-def _closure_from(edges_sd: DataFrame, start: str, max_depth: int = 64) -> DataFrame:
-    """Closure over pre-filtered (src, dst) edges starting at `start`,
-    following src→dst repeatedly. Returns (name, depth)."""
-    probe = edges_sd.select("src", "dst").limit(_DRIVER_BFS_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_BFS_MAX_EDGES:
-        return _driver_bfs(
-            edges_sd.sparkSession, [(r["src"], r["dst"]) for r in probe], start, max_depth
-        )
-    e = edges_sd.select("src", "dst").localCheckpoint()
-    frontier = (
-        e.where(F.col("src") == start)
-        .select(F.col("dst").alias("name"))
-        .distinct()
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint()
-    )
-    seen = frontier
-    depth = 1
-    while depth < max_depth:
-        nxt = (
-            e.join(frontier.select(F.col("name").alias("src")), "src")
-            .select(F.col("dst").alias("name"))
-            .distinct()
-            .join(seen.select("name"), "name", "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-        depth += 1
-    return seen
-
-
-def shortest_path_length(edges: DataFrame, a: str, b: str,
-                         max_depth: int = 32) -> int | None:
-    """Undirected BFS hop count a↔b (QA Q16). None if unreachable."""
+def shortest_path_length(edges: DataFrame, a: str, b: str) -> int | None:
+    """Undirected BFS hop count a↔b (QA Q16). None if unreachable or
+    a == b."""
     e = edges.select("src", "dst")
-    probe = e.limit(_DRIVER_BFS_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_BFS_MAX_EDGES:
-        pairs = [(r["src"], r["dst"]) for r in probe]
-        levels = _bfs_levels(
-            pairs + [(y, x) for x, y in pairs], a, max_depth, exclude_start=True
-        )
-        d = levels.get(b)
-        return d if d else None
-    und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct().localCheckpoint()
-    frontier = und.sparkSession.createDataFrame([(a,)], "name string")
-    seen = frontier
-    for depth in range(1, max_depth + 1):
-        frontier = (
-            und.join(frontier.withColumnRenamed("name", "src"), "src")
-            .select(F.col("dst").alias("name"))
-            .distinct()
-            .join(seen, "name", "left_anti")
-            .localCheckpoint()
-        )
-        if frontier.isEmpty():
-            return None
-        if not frontier.where(F.col("name") == b).isEmpty():
-            return depth
-        seen = seen.unionByName(frontier).localCheckpoint()
-    return None
+    und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    hit = _closure_from(und, a, exclude_start=True).where(F.col("name") == b).collect()
+    return hit[0]["depth"] if hit else None
 
 
 def hierarchy_depth(edges: DataFrame, root: str = "Thing") -> int:

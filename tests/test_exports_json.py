@@ -98,6 +98,13 @@ def test_subclass_cycles_and_consistency_report(spark):
     )
     assert EX.subclass_cycles(clean).count() == 0
 
+    # an 80-node cycle is closed in full (no round cap)
+    ring = spark.createDataFrame(
+        [(f"r{i}", "SUBCLASS_OF", f"r{(i + 1) % 80}") for i in range(80)],
+        "src string, rel_type string, dst string",
+    )
+    assert {r["name"] for r in EX.subclass_cycles(ring).collect()} == {f"r{i}" for i in range(80)}
+
 
 def test_axiom_interaction_clashes_and_same_as(spark):
     """Functional / inverse-functional axioms interact with class

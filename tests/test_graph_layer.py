@@ -34,6 +34,11 @@ def test_connected_components_chain_and_hub(spark, small_threshold):
     # canonical nodes never map away
     assert "resistor" not in mapping
     assert "antenna" not in mapping
+    # a 60-node chain is one component on both paths (no round cap)
+    chain = spark.createDataFrame([(f"c{i:02d}", f"c{i + 1:02d}") for i in range(59)],
+                                  "src string, dst string")
+    cc = CC.connected_components(chain, small_threshold=small_threshold).collect()
+    assert len(cc) == 60 and {r["component"] for r in cc} == {"c00"}
 
 
 def test_apply_canonicalization(spark):
@@ -52,7 +57,7 @@ def test_apply_canonicalization(spark):
     assert len([t for t in out if t[1] == "subclass_of"]) == 1
 
 
-def test_descendants_and_ancestors(graph):
+def test_descendants_and_ancestors(spark, graph):
     nodes, edges = graph
     desc = {r["name"]: r["depth"] for r in G.descendants(edges, "ElectronicComponent").collect()}
     assert desc["PassiveComponent"] == 1
@@ -61,6 +66,15 @@ def test_descendants_and_ancestors(graph):
     assert "Organization" not in desc
     anc = {r["name"]: r["depth"] for r in G.ancestors(edges, "FPCAntenna").collect()}
     assert anc == {"Antenna": 1, "RFComponent": 2, "ElectronicComponent": 3, "Product": 4, "Thing": 5}
+    # a 70-level chain is closed to its full depth (no depth cap)
+    chain = spark.createDataFrame(
+        [(f"L{i + 1}", "SUBCLASS_OF", f"L{i}") for i in range(70)],
+        "src string, rel_type string, dst string",
+    )
+    desc = {r["name"]: r["depth"] for r in G.descendants(chain, "L0").collect()}
+    assert desc == {f"L{i}": i for i in range(1, 71)}
+    anc = {r["name"]: r["depth"] for r in G.ancestors(chain, "L70").collect()}
+    assert anc == {f"L{i}": 70 - i for i in range(70)}
 
 
 def test_hierarchy_depth_and_leaves(graph):
@@ -71,11 +85,15 @@ def test_hierarchy_depth_and_leaves(graph):
     assert "Antenna" not in leaf_names and "Thing" not in leaf_names
 
 
-def test_shortest_path(graph):
+def test_shortest_path(spark, graph):
     _, edges = graph
     assert G.shortest_path_length(edges, "Resistor", "Capacitor") == 2  # via PassiveComponent
     assert G.shortest_path_length(edges, "FPCAntenna", "Thing") == 5
-    assert G.shortest_path_length(edges, "Resistor", "Resistor") is None or True  # self not asked
+    assert G.shortest_path_length(edges, "Resistor", "Resistor") is None
+    path = spark.createDataFrame([(f"p{i}", "RELATEDTO", f"p{i + 1}") for i in range(40)],
+                                 "src string, rel_type string, dst string")
+    assert G.shortest_path_length(path, "p0", "p40") == 40
+    assert G.shortest_path_length(path, "p40", "p0") == 40
 
 
 def test_siblings_and_degree(graph):
