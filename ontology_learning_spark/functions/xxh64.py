@@ -109,8 +109,10 @@ def _xxh64_fixed_len(buf: "np.ndarray", L: int, seed: int) -> "np.ndarray":
     """XXH64 of k same-length byte strings: ``buf`` is (k, Lpad) uint8 with
     Lpad a multiple of 8 and bytes beyond L zero (never read — the spec's
     reads at 8/4/1-byte granularity stay inside L)."""
-    w64 = buf.view(np.uint64)
-    w32 = buf.view(np.uint32)
+    # XXH64 reads little-endian words: an explicit '<' view keeps the
+    # result host-byte-order independent
+    w64 = buf.view(np.dtype("<u8"))
+    w32 = buf.view(np.dtype("<u4"))
     k = buf.shape[0]
     i = 0
     if L >= 32:

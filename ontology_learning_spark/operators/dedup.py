@@ -1,7 +1,13 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are pure Catalyst (xxhash64, higher-order array
-functions) — no Python on executors except the vectorized simhash.
+Where Python runs on executors: the shingle tokenizer (an Arrow
+pandas UDF for ``word_shingles``, and inside the two ``mapInArrow``
+passes ``exploded_gram_hashes`` and ``minhash_band_table``, which also
+hash grams with the bit-exact ``functions.xxh64``) and SimHash (a
+pandas UDF). Exact dedup, the band-key candidate join, the Jaccard
+verify set ops and the SimHash blocking join are Catalyst. The pure-JVM
+reference forms the parity tests compare against live in
+``oracle/dedup_reference.py``.
 
 Scale notes:
 - exact dedup is one hash-groupBy shuffle; at 100 TB you'd pre-bucket
@@ -15,6 +21,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 
 import numpy as np
@@ -48,41 +55,28 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # ---------------------------------------------------------------------------
 
 
-def word_shingles_catalyst(col, n: int = 3):
-    """Distinct word n-grams as an array column (pure Catalyst).
-
-    Shape matters: referencing the tokenized array inside a per-element
-    lambda (the round-1 form indexed `toks` via element_at per shingle)
-    gets the regex split INLINED into the lambda by projection collapse
-    — re-tokenizing the whole document once per shingle, O(tokens²)
-    regex work per doc (measured 20s of the 21s minhash bench time at
-    sf0.1). arrays_zip of n shifted slices evaluates the split O(n)
-    times per ROW instead, and the zip/transform are per-element cheap.
-
-    Kept as the JVM reference implementation (and the semantic twin of
-    the DuckDB oracles); the hot paths use the vectorized
-    ``word_shingles`` below — higher-order array functions are
-    INTERPRETED expression eval (no whole-stage codegen), and the
-    zip/struct/concat chain was measured at ~300 core-seconds for 2.6M
-    shingles (50k docs) vs ~10 for the Arrow-vectorized form.
-    ``tests/test_round6_shingles.py`` pins bitwise equality of the two
-    on adversarial inputs (tabs/newlines/empties/nulls/repeats)."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(toks, j + 1, k) for j in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)])
-    )
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array()))
-
+# Word n-gram length of every MinHash-LSH and verify path.
+# ``word_shingles`` and ``exploded_gram_hashes`` keep an ``n`` because
+# decontamination uses 8-grams.
+SHINGLE_N = 3
 
 # Java-regex \s (no UNICODE_CHARACTER_CLASS) = [ \t\n\x0B\f\r]; using the
 # exact class keeps the Python tokenizer bit-identical to
 # F.split(..., r"\s+") even on control-character whitespace. F.trim
 # strips U+0020 only → .strip(" "), not .strip().
-import re as _re
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
-_JAVA_WS = _re.compile("[ \t\n\x0b\f\r]+")
+
+def _distinct_grams(text: str | None, n: int) -> list[str]:
+    """A doc's distinct word ``n``-grams in first-occurrence order: the
+    one Python tokenizer behind every shingle path, bit-identical to the
+    JVM reference ``oracle.dedup_reference.word_shingles_catalyst``
+    (dict.fromkeys keeps the first occurrence, exactly array_distinct's
+    semantics; fewer than ``n`` tokens give no grams)."""
+    toks = _JAVA_WS.split((text or "").strip(" ").lower())
+    return list(dict.fromkeys(
+        " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
+    ))
 
 
 def _shingle_udf(n: int):
@@ -90,23 +84,11 @@ def _shingle_udf(n: int):
     interpreted JVM higher-order functions (guide §4.1/§4.2 — the
     Catalyst zip/transform/distinct chain evaluates per-element in
     interpreted mode and allocates a struct row per shingle; measured
-    ~30x slower than this form at 50k docs). dict.fromkeys preserves
-    first-occurrence order — exactly array_distinct's semantics."""
+    ~30x slower than this form at 50k docs)."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def udf(texts: pd.Series) -> pd.Series:
-        out = []
-        append = out.append
-        split = _JAVA_WS.split
-        for t in texts:
-            toks = split((t or "").strip(" ").lower())
-            if len(toks) < n:
-                append([])
-            else:
-                append(list(dict.fromkeys(
-                    " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
-                )))
-        return pd.Series(out)
+        return pd.Series([_distinct_grams(t, n) for t in texts])
 
     return udf
 
@@ -114,78 +96,33 @@ def _shingle_udf(n: int):
 _SHINGLE_UDFS: dict[int, object] = {}
 
 
-def word_shingles(col, n: int = 3):
+def word_shingles(col, n: int = SHINGLE_N):
     """Distinct word n-grams as an array column. Semantics identical to
-    ``word_shingles_catalyst`` (the parity test pins it); implementation
-    is an Arrow-vectorized UDF because the Catalyst higher-order-function
-    chain runs interpreted and dominated the minhash/dedup walls."""
+    ``oracle.dedup_reference.word_shingles_catalyst`` (the parity test
+    pins it); implementation is an Arrow-vectorized UDF because the
+    Catalyst higher-order-function chain runs interpreted and dominated
+    the minhash/dedup walls."""
     udf = _SHINGLE_UDFS.get(n)
     if udf is None:
         udf = _SHINGLE_UDFS[n] = _shingle_udf(n)
     return udf(col)
 
 
-def exploded_shingles(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """(id, g) rows — ``explode(word_shingles(text))`` fused into ONE
-    mapInArrow pass that emits the exploded rows directly.
-
-    Row-for-row identical to the array form followed by explode (the
-    round-6 parity test pins it); the fusion exists because building a
-    per-doc list<string> pandas Series and exploding it in the JVM cost
-    ~4x the fused form (measured 3.2 s vs 0.8 s for 2.6M shingles at
-    50k docs): python-list → Arrow ListArray conversion plus the
-    Generate node dominate, while a flat (id, gram) RecordBatch built
-    once per Arrow batch is two contiguous arrays. Used by the
-    corpus-scale gram paths (minhash signatures, decontamination);
-    the array form stays for candidate-verify set ops."""
-    import pyarrow as pa
-
-    ws_split = _JAVA_WS.split
-
-    def _run(batches):
-        for b in batches:
-            id_type = b.column(0).type
-            ids = b.column(0).to_pylist()
-            texts = b.column(1).to_pylist()
-            out_id: list = []
-            out_g: list = []
-            extend_id = out_id.extend
-            extend_g = out_g.extend
-            for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
-                    continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
-                extend_g(gs)
-                extend_id([i] * len(gs))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=id_type), pa.array(out_g, type=pa.string())],
-                names=["id", "g"],
-            )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(
-        _run, f"id {id_type}, g string"
-    )
-
-
 def exploded_gram_hashes(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """(id, gh) rows ≡ ``exploded_shingles(...).select(id,
-    xxhash64(g))`` — the gram hash folded into the SAME Arrow pass
-    (``functions.xxh64`` is pinned bit-exact with ``F.xxhash64``), so
-    consumers that only ever see hashed grams (decontamination) never
-    serialize the gram STRINGS across the Arrow boundary at all: the
-    pass emits (id, int64) — ~8 bytes vs ~50-char gram text per row
-    (guide §4.1: you control how many bytes cross)."""
+                         id_col: str = "doc_id", n: int = SHINGLE_N) -> DataFrame:
+    """(id, gh) rows ≡ ``explode(word_shingles(text))`` with each gram
+    ``xxhash64``'d, in ONE mapInArrow pass (``functions.xxh64`` is
+    pinned bit-exact with ``F.xxhash64``), so consumers that only ever
+    see hashed grams (decontamination) never serialize the gram STRINGS
+    across the Arrow boundary at all: the pass emits (id, int64) — ~8
+    bytes vs ~50-char gram text per row (guide §4.1: you control how
+    many bytes cross). Emitting the flat exploded rows directly also
+    skips the per-doc list<string> conversion and the JVM Generate node
+    (for gram strings this fusion measured 0.8 s vs 3.2 s for array
+    form + explode, 2.6M shingles at 50k docs)."""
     import pyarrow as pa
 
     from ..functions.xxh64 import xxh64_many
-
-    ws_split = _JAVA_WS.split
 
     def _run(batches):
         for b in batches:
@@ -194,17 +131,10 @@ def exploded_gram_hashes(df: DataFrame, text_col: str = "text",
             texts = b.column(1).to_pylist()
             out_id: list = []
             gram_bytes: list = []
-            extend_id = out_id.extend
-            extend_g = gram_bytes.extend
             for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
-                    continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
-                extend_g(g.encode("utf-8") for g in gs)
-                extend_id([i] * len(gs))
+                gs = _distinct_grams(txt, n)
+                gram_bytes.extend(g.encode("utf-8") for g in gs)
+                out_id.extend([i] * len(gs))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(out_id, type=id_type), pa.array(xxh64_many(gram_bytes))],
                 names=["id", "gh"],
@@ -228,19 +158,6 @@ def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
 
     rng = random.Random(1234)
     return [(rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P)) for _ in range(num_hashes)]
-
-
-def minhash_signature(shingles_col, num_hashes: int = 32):
-    """MinHash signature as an array column (narrow path, kept for
-    composability; the candidates pipeline below uses the faster
-    explode+groupBy variant)."""
-    base = F.transform(shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31)))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, lambda h, a=a, b=b: (h * a + b) % _MERSENNE_P))
-            for a, b in _hash_params(num_hashes)
-        ]
-    )
 
 
 def minhash_plan(threshold: float, target_recall: float = 0.99,
@@ -301,87 +218,60 @@ def minhash_plan(threshold: float, target_recall: float = 0.99,
     return best
 
 
-def _resolve_minhash_geometry(
-    threshold: float, num_hashes: int | None, bands: int | None,
-    margin: float = 0.13,
-) -> tuple[int, int]:
-    """(num_hashes, bands), coherent when only ONE is given.
-
-    Mixing one explicit value with the other taken from
-    ``minhash_plan`` computes the auto half for a DIFFERENT geometry
-    (e.g. num_hashes=32 with auto bands=10 → r=3, two hashes silently
-    discarded, midpoint J≈0.46). Instead: given only ``num_hashes``,
-    pick the divisor band count whose S-curve midpoint (1/b)^(1/r)
-    lands lowest while still clearing threshold−margin (falling back
-    to the highest midpoint available); given only ``bands``, solve
-    the smallest r with (1/b)^(1/r) ≥ threshold−margin."""
-    import math
-
-    if num_hashes is None and bands is None:
-        return minhash_plan(threshold)
-    if num_hashes is not None and bands is not None:
-        return num_hashes, bands
-    if num_hashes is not None:
-        divs = [b for b in range(2, num_hashes // 2 + 1) if num_hashes % b == 0]
-        if not divs:
-            raise ValueError(
-                f"num_hashes={num_hashes} admits no (bands, rows) split "
-                f"with bands>=2 and rows>=2; pass bands explicitly")
-        # midpoint falls as b rises (smaller r): max(ok) = best recall
-        # that still clears; fallback = smallest b = closest from below
-        ok = [b for b in divs if (1 / b) ** (b / num_hashes) >= threshold - margin]
-        return num_hashes, (max(ok) if ok else min(divs))
-    r = max(2, math.ceil(math.log(bands) / -math.log(max(threshold - margin, 1e-9))))
-    return bands * r, bands
+def _band_candidates(new_bands: DataFrame, all_bands: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of a ``new_bands`` doc and an
+    ``all_bands`` doc that share a (band, bh) key: the one LSH
+    candidate join. A one-shot run passes the same table twice; a delta
+    passes its own keys and history ∪ delta, so only new×hist and
+    new×new pairs are probed."""
+    a, b = new_bands.alias("a"), all_bands.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
+               & (F.col("a.id") != F.col("b.id")))
+        .select(F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
+                F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"))
+        .distinct()
+    )
 
 
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash (id_a < id_b).
-    ``num_hashes``/``bands`` default to ``minhash_plan(threshold)``;
-    with exactly one given, the other is derived coherently from it
-    (``_resolve_minhash_geometry``).
+    """Near-dup candidate pairs via banded MinHash (id_a < id_b), with
+    the band geometry of ``minhash_plan(threshold)``.
 
     The band table is PINNED before the self-join: the executed plan
-    otherwise runs the whole signature subtree (Arrow shingle pass +
-    wide min-aggregation) once per join side — AQE's broadcast-join
-    conversion replaces one side's Exchange with a BroadcastExchange,
-    so ReuseExchange never fires on this shape (verified: 2x
-    PythonMapInArrow in the executed plan without the pin)."""
+    otherwise runs the whole signature subtree (the Arrow band pass)
+    once per join side — AQE's broadcast-join conversion replaces one
+    side's Exchange with a BroadcastExchange, so ReuseExchange never
+    fires on this shape (verified: 2x PythonMapInArrow in the executed
+    plan without the pin)."""
     from ..functions.persistence import materialize
 
-    banded = materialize(minhash_band_table(df, text_col, id_col, num_hashes,
-                                            bands, shingle_n, threshold))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    banded = materialize(minhash_band_table(df, text_col, id_col, threshold))
+    return _band_candidates(banded, banded)
+
+
+# Gram rows per (grams × hashes) product block of the band pass: ~86 MB
+# of int64 at 90 hashes. Read when the pass is built, so a doc with more
+# distinct grams than this spans several blocks instead of one
+# unbounded one.
+_BAND_CHUNK_GRAMS = 120_000
 
 
 def minhash_band_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
     """The (id, band, bh) band-key table for a corpus slice — the
     persistable LSH state an INCREMENTAL dedup maintains: a delta's
     keys join against the stored table instead of re-signing history.
-    Geometry is threshold-driven (``minhash_plan``) and therefore
+    Geometry is ``minhash_plan(threshold)`` and therefore
     corpus-size-INDEPENDENT, which is what makes the table stable
     across deltas (the same threshold always produces the same keys).
     At scale, store it bucketed by (band, bh) so the candidate join is
@@ -391,21 +281,22 @@ def minhash_band_table(
     gram (``functions.xxh64``, bit-exact with ``F.xxhash64``), fold the
     universal-hash mins per doc, and hash each band's signature slice —
     emitting (id, band, bh) directly. Row-identical to the JVM
-    reference (``minhash_band_table_catalyst``: explode → xxhash64 →
-    wide groupBy-min → band struct explode), pinned by
-    ``tests/test_round6_band_arrow.py``. The fusion removes the gram
-    exchange, the ``num_hashes``-column aggregation (and its multi-
-    second one-time codegen compile), and ~90 driver-side expression
-    trees per call — at 100 TB the gram explode was the single largest
-    shuffle in the dedup path; here the grams never leave the Python
-    worker that produced them."""
-    num_hashes, bands = _resolve_minhash_geometry(threshold, num_hashes, bands)
+    reference (``oracle.dedup_reference.minhash_band_table_catalyst``:
+    explode of the Catalyst shingles → xxhash64 → wide groupBy-min →
+    band struct explode), pinned by ``tests/test_round6_band_arrow.py``.
+    The fusion removes the gram exchange, the per-hash min aggregation
+    (and its multi-second one-time codegen compile), and ~90
+    driver-side expression trees per call — at 100 TB the gram explode
+    was the single largest shuffle in the dedup path; here the grams
+    never leave the Python worker that produced them. Worker memory is
+    bounded by ``_BAND_CHUNK_GRAMS`` grams per product block, whatever
+    the size of one doc."""
+    num_hashes, bands = minhash_plan(threshold)
     rows = num_hashes // bands
     params = _hash_params(num_hashes)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
-    n = shingle_n
-    ws_split = _JAVA_WS.split
+    chunk = _BAND_CHUNK_GRAMS
     p31 = np.int64(1 << 31)
     mersenne = np.int64(_MERSENNE_P)
 
@@ -422,12 +313,9 @@ def minhash_band_table(
             gram_bytes: list = []
             offsets = [0]
             for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
+                gs = _distinct_grams(txt, SHINGLE_N)
+                if not gs:
                     continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
                 doc_ids.append(i)
                 gram_bytes.extend(g.encode("utf-8") for g in gs)
                 offsets.append(len(gram_bytes))
@@ -444,20 +332,21 @@ def minhash_band_table(
             # modulus), exactly pmod.
             base = xxh64_many(gram_bytes) % p31
             n_docs_b = len(doc_ids)
-            mins = np.empty((n_docs_b, num_hashes), dtype=np.int64)
-            # chunk the (grams x num_hashes) outer product to bound
-            # worker memory (~90 MB per 120k-gram chunk at 90 hashes)
-            c0 = 0
-            while c0 < n_docs_b:
-                c1 = c0 + 1
-                g0 = offsets[c0]
-                while c1 < n_docs_b and offsets[c1 + 1] - g0 <= 120_000:
-                    c1 += 1
-                g1 = offsets[c1]
+            n_grams = len(gram_bytes)
+            offs = np.asarray(offsets, dtype=np.int64)
+            # the (grams x num_hashes) product in blocks of `chunk` grams:
+            # docs d0..d1-1 overlap block [g0, g1), and a doc that spans
+            # blocks folds its per-block mins with np.minimum (every
+            # product is < mersenne, and every doc has >= 1 gram)
+            mins = np.full((n_docs_b, num_hashes), mersenne, dtype=np.int64)
+            for g0 in range(0, n_grams, chunk):
+                g1 = min(g0 + chunk, n_grams)
+                d0 = int(np.searchsorted(offs, g0, side="right")) - 1
+                d1 = int(np.searchsorted(offs, g1, side="left"))
                 prod = (base[g0:g1, None] * a_vec[None, :] + b_vec[None, :]) % mersenne
-                starts = np.asarray(offsets[c0:c1], dtype=np.int64) - g0
-                mins[c0:c1] = np.minimum.reduceat(prod, starts, axis=0)
-                c0 = c1
+                starts = np.maximum(offs[d0:d1], g0) - g0
+                np.minimum(mins[d0:d1], np.minimum.reduceat(prod, starts, axis=0),
+                           out=mins[d0:d1])
             # band hash: xxhash64 of the comma-joined signature slice —
             # identical bytes to concat_ws(",", m...) (Long.toString ≡
             # str(int) for decimal longs)
@@ -482,51 +371,12 @@ def minhash_band_table(
     )
 
 
-def minhash_band_table_catalyst(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """JVM reference for ``minhash_band_table`` (and its semantic twin
-    for the DuckDB oracles): fused shingle+explode Arrow pass → one
-    ``F.xxhash64`` per shingle → ``num_hashes`` plain arithmetic
-    projections (whole-stage codegen) → groupBy-min → band struct
-    explode. The parity test pins the Arrow fast path against this."""
-    num_hashes, bands = _resolve_minhash_geometry(threshold, num_hashes, bands)
-    rows = num_hashes // bands
-    params = _hash_params(num_hashes)
-    ex = exploded_shingles(df, text_col, id_col, shingle_n).withColumn(
-        "h", F.pmod(F.xxhash64("g"), F.lit(1 << 31))
-    )
-    sig = ex.groupBy("id").agg(
-        *[F.min((F.col("h") * a + b) % _MERSENNE_P).alias(f"m{i}")
-          for i, (a, b) in enumerate(params)]
-    )
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(F.concat_ws(",", *[F.col(f"m{b * rows + j}") for j in range(rows)])).alias("bh"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-
-
 def jaccard_verify(
     candidates: DataFrame,
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact word-shingle Jaccard on candidate pairs only. Shingles are
     computed only for rows that appear in a candidate pair (semi-join
@@ -551,7 +401,7 @@ def jaccard_verify(
     sh = materialize(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         .join(F.broadcast(cand_ids), "id", "left_semi")
-        .select("id", word_shingles(F.col("_t"), shingle_n).alias("sh"))
+        .select("id", word_shingles(F.col("_t")).alias("sh"))
     )
     j = (
         candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -571,18 +421,14 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
-    Band geometry defaults to ``minhash_plan(threshold)`` so the
-    S-curve midpoint tracks the verify threshold — the candidate set
-    stays proportional to the real near-dup mass, not to the corpus's
+    The band geometry is ``minhash_plan(threshold)``, so the S-curve
+    midpoint tracks the verify threshold — the candidate set stays
+    proportional to the real near-dup mass, not to the corpus's
     moderate-similarity pair count (see ``minhash_plan``)."""
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands,
-                                   shingle_n, threshold)
-    return jaccard_verify(cands, df, text_col, id_col, threshold, shingle_n)
+    cands = minhash_lsh_candidates(df, text_col, id_col, threshold)
+    return jaccard_verify(cands, df, text_col, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -650,9 +496,6 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.9,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DataFrame:
     """Near-dup CLUSTERS: LSH candidate pairs → exact-Jaccard verify →
     connected components → one representative per cluster.
@@ -687,8 +530,7 @@ def dedup_clusters(
     # padded→raw id map, and recomputing them means re-running the
     # signature+verify pipeline per consumer (measured 1061 s → ~150 s
     # at 320k docs from this and the jaccard_verify pin alone).
-    pairs = materialize(ngram_jaccard_pairs(df, text_col, id_col, threshold,
-                                            shingle_n, num_hashes, bands))
+    pairs = materialize(ngram_jaccard_pairs(df, text_col, id_col, threshold))
     # Pad width sized to the data: lpad TRUNCATES overflow, so a fixed
     # 20 would merge any two >20-char ids sharing a 20-char prefix into
     # one CC node. One tiny agg over the already-materialized pairs.
@@ -854,8 +696,31 @@ class DedupState(NamedTuple):
     mapping: DataFrame
 
 
-def _pairs_to_edges(pairs: DataFrame) -> DataFrame:
-    return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+def dedup_fold(
+    mapping: DataFrame | None,
+    new_bands: DataFrame,
+    all_bands: DataFrame,
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.5,
+) -> DataFrame:
+    """One fold step of incremental near-dup dedup: the band-key
+    candidates of ``new_bands`` against ``all_bands`` (the same table
+    for a first pass, history ∪ delta after that), exact-Jaccard
+    verified against ``docs`` (the id→text lookup; only candidate ids
+    are read from it), folded into ``mapping`` by
+    ``incremental_components`` — or, with no mapping yet, into a fresh
+    ``connected_components``. Returns the new (node, component)
+    mapping, unmaterialized: the caller pins or writes it."""
+    from .canonicalize import connected_components, incremental_components
+
+    pairs = jaccard_verify(_band_candidates(new_bands, all_bands), docs,
+                           text_col, id_col, threshold)
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    if mapping is None:
+        return connected_components(edges)
+    return incremental_components(mapping, edges)
 
 
 def dedup_state_init(
@@ -863,25 +728,12 @@ def dedup_state_init(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DedupState:
     """First full pass: band table + verified pairs + CC mapping."""
     from ..functions.persistence import materialize
-    from .canonicalize import connected_components
 
-    b = materialize(minhash_band_table(df, text_col, id_col, num_hashes,
-                                       bands, shingle_n, threshold))
-    a_, b_ = b.alias("a"), b.alias("b")
-    cands = (
-        a_.join(b_, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    pairs = jaccard_verify(cands, df, text_col, id_col, threshold, shingle_n)
-    mapping = materialize(connected_components(_pairs_to_edges(pairs)))
+    b = materialize(minhash_band_table(df, text_col, id_col, threshold))
+    mapping = materialize(dedup_fold(None, b, b, df, text_col, id_col, threshold))
     return DedupState(b, mapping)
 
 
@@ -892,9 +744,6 @@ def dedup_state_update(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DedupState:
     """Fold a document delta into the dedup state WITHOUT re-signing or
     re-pairing history: the delta's band keys join against the stored
@@ -908,27 +757,15 @@ def dedup_state_update(
     Invariant (pytest-pinned): after any split of a corpus into
     init + updates, ``state.mapping`` equals the mapping a full
     one-shot run produces over the whole corpus — use the SAME
-    threshold/geometry across deltas (the threshold-driven plan is
-    corpus-size-independent, so this is the default behavior).
+    threshold across deltas (the threshold-driven geometry is
+    corpus-size-independent, so equal thresholds mean equal keys).
     """
     from ..functions.persistence import materialize
-    from .canonicalize import incremental_components
 
-    nb = materialize(minhash_band_table(new_docs, text_col, id_col, num_hashes,
-                                        bands, shingle_n, threshold))
+    nb = materialize(minhash_band_table(new_docs, text_col, id_col, threshold))
     all_bands = state.bands.unionByName(nb)
-    a_, b_ = nb.alias("a"), all_bands.alias("b")
-    cands = (
-        a_.join(b_, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.id") != F.col("b.id")))
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    pairs = jaccard_verify(cands, all_docs, text_col, id_col, threshold, shingle_n)
-    mapping = materialize(incremental_components(state.mapping, _pairs_to_edges(pairs)))
+    mapping = materialize(dedup_fold(state.mapping, nb, all_bands, all_docs,
+                                     text_col, id_col, threshold))
     # bands stays a LAZY union of already-pinned parts — re-materializing
     # it would rewrite the whole history every fold (measured: the
     # re-checkpoint dominated the delta wall at 320k docs). At scale

@@ -29,7 +29,6 @@ import json
 from pathlib import Path
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..fixtures.generator import DOCUMENT_SCHEMA
 from ..operators import extraction as E
@@ -241,7 +240,6 @@ def run_streaming_near_dedup(
     state_dir: str,
     checkpoint_dir: str,
     threshold: float = 0.9,
-    shingle_n: int = 3,
     timeout_sec: int = 300,
     max_files_per_trigger: int = 4,
 ) -> None:
@@ -250,6 +248,8 @@ def run_streaming_near_dedup(
     state — band keys under ``state_dir/bands/batch_id=N``, docs under
     ``state_dir/docs/batch_id=N`` (the verify-side text lookup), and
     the live (node, component) mapping under ``state_dir/mapping/vN``.
+    Each batch folds in with ``operators.dedup.dedup_fold``, the same
+    step ``dedup_state_update`` runs.
 
     Replay safety WITHOUT transactional state: batch-scoped OVERWRITE
     for docs/bands (re-running batch N rewrites the same partitions),
@@ -260,8 +260,7 @@ def run_streaming_near_dedup(
     state store): this path catches near-duplicates and keeps its
     state queryable as plain tables.
     """
-    from ..operators.canonicalize import connected_components, incremental_components
-    from ..operators.dedup import jaccard_verify, minhash_band_table
+    from ..operators.dedup import dedup_fold, minhash_band_table
 
     def _latest_mapping() -> tuple[int, "DataFrame | None"]:
         mroot = Path(state_dir) / "mapping"
@@ -285,28 +284,17 @@ def run_streaming_near_dedup(
         batch_df = batch_df.select("doc_id", "text")
         batch_df.write.mode("overwrite").parquet(f"{state_dir}/docs/batch_id={batch_id}")
         nb = minhash_band_table(
-            s.read.parquet(f"{state_dir}/docs/batch_id={batch_id}"),
-            shingle_n=shingle_n, threshold=threshold,
+            s.read.parquet(f"{state_dir}/docs/batch_id={batch_id}"), threshold=threshold,
         )
         nb.write.mode("overwrite").parquet(f"{state_dir}/bands/batch_id={batch_id}")
-        nb = s.read.parquet(f"{state_dir}/bands/batch_id={batch_id}")
-        all_bands = s.read.parquet(f"{state_dir}/bands")
-        all_docs = s.read.parquet(f"{state_dir}/docs")
-        a_, b_ = nb.alias("a"), all_bands.alias("b")
-        cands = (
-            a_.join(b_, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bh") == F.col("b.bh"))
-                    & (F.col("a.id") != F.col("b.id")))
-            .select(F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-                    F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"))
-            .distinct()
-        )
-        pairs = jaccard_verify(cands, all_docs, threshold=threshold,
-                               shingle_n=shingle_n)
-        edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         _, mapping = _latest_mapping()
-        mapping = connected_components(edges) if mapping is None \
-            else incremental_components(mapping, edges)
+        mapping = dedup_fold(
+            mapping,
+            s.read.parquet(f"{state_dir}/bands/batch_id={batch_id}"),
+            s.read.parquet(f"{state_dir}/bands"),
+            s.read.parquet(f"{state_dir}/docs"),
+            threshold=threshold,
+        )
         mapping.write.mode("overwrite").parquet(f"{state_dir}/mapping/v{batch_id}")
 
     stream = (

@@ -1,5 +1,5 @@
 """Round-5 guards for the ADVICE.md items: minhash_plan degraded-regime
-warning, coherent one-param sketch geometry, simhash block-count guard,
+warning, coherent one-param LSH geometry, simhash block-count guard,
 and the dedup_clusters pad-width contract for long string ids."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontology_learning_spark.operators.dedup import (
-    _resolve_minhash_geometry,
     dedup_clusters,
     minhash_plan,
     simhash_near_dups,
@@ -25,27 +24,6 @@ def test_minhash_plan_warns_only_when_cap_binds():
     assert not rec, "no warning expected when the midpoint clears"
     with pytest.warns(UserWarning, match="cap binds"):
         minhash_plan(0.5)
-
-
-def test_minhash_geometry_one_param_is_coherent():
-    # both given: passthrough
-    assert _resolve_minhash_geometry(0.9, 128, 16) == (128, 16)
-    # neither: the plan
-    assert _resolve_minhash_geometry(0.9, None, None) == minhash_plan(0.9)
-    # only num_hashes: a divisor split whose midpoint clears t - margin
-    # (the old behavior discarded hashes: 32 hashes with auto bands=10
-    # meant r=3 and 2 dead hashes)
-    h, b = _resolve_minhash_geometry(0.9, 32, None)
-    assert h == 32 and 32 % b == 0
-    r = h // b
-    assert (1 / b) ** (1 / r) >= 0.9 - 0.13
-    # only bands: r solved so the midpoint clears
-    h2, b2 = _resolve_minhash_geometry(0.9, None, 10)
-    assert b2 == 10 and h2 % 10 == 0
-    assert (1 / 10) ** (10 / h2) >= 0.9 - 0.13
-    # prime num_hashes has no (>=2, >=2) split
-    with pytest.raises(ValueError):
-        _resolve_minhash_geometry(0.9, 7, None)
 
 
 def test_lsh_geometry_one_param_is_coherent():

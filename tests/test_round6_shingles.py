@@ -10,10 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ontology_learning_spark.operators.dedup import (
-    word_shingles,
-    word_shingles_catalyst,
-)
+from ontology_learning_spark.operators.dedup import word_shingles
+from ontology_learning_spark.oracle.dedup_reference import word_shingles_catalyst
 
 ADVERSARIAL_TEXTS = [
     None,
@@ -50,23 +48,6 @@ def test_udf_shingles_bitwise_equal_catalyst(spark, n):
     ).collect()
     for r in out:
         assert r["ref"] == r["opt"], (n, r["doc_id"], r["ref"], r["opt"])
-
-
-@pytest.mark.parametrize("n", [3, 8])
-def test_exploded_shingles_equals_explode_of_array_form(spark, n):
-    from ontology_learning_spark.operators.dedup import exploded_shingles
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(ADVERSARIAL_TEXTS)], "doc_id long, text string"
-    )
-    ref = (
-        df.select(F.col("doc_id").alias("id"),
-                  F.explode(word_shingles_catalyst(F.col("text"), n)).alias("g"))
-        .groupBy("id", "g").count()
-    )
-    opt = exploded_shingles(df, "text", "doc_id", n).groupBy("id", "g").count()
-    assert ref.join(opt, ["id", "g", "count"], "left_anti").count() == 0
-    assert opt.join(ref, ["id", "g", "count"], "left_anti").count() == 0
 
 
 def test_udf_shingles_equal_on_driver_corpus(spark):
